@@ -38,8 +38,6 @@ object BenchExtra {
     // connected-components rounds — so the round overhead is attributable
     if (args.headOption.contains("ccprof")) {
       import org.apache.spark.sql.functions._
-      graft.functions.SimHash32.register(spark)
-      graft.functions.MinHash32.register(spark)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       (0 until reps).foreach { i =>
         System.gc()

@@ -2,51 +2,60 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The engine's standard local-session configuration, in ONE place —
-  * Bench, ScalingBench, Verify, Explain and RunOne all build from
-  * here, so a perf conf added for one harness cannot silently drift
-  * out of the others (the repo already retrofitted
-  * `objectHashAggregate.sortBased.fallbackThreshold` into every
-  * builder by hand once). The settings are the BENCH.md §0/§3
-  * hygiene set:
+/** The engine's session configuration, in ONE place, in two layers.
+  *
+  * [[engine]] is what every session running engine queries gets,
+  * the deployed [[PipelineMain]] included (BENCH.md §0/§3):
   *
   *  - `shuffle.partitions` = the worker-thread count (not 200)
+  *  - [[GraftExtensions]] (custom functions + as-of join strategy)
+  *  - UTC session time zone, AQE on
   *  - 256-row columnar reader batches (binary-payload tables OOM the
   *    4096-row default on ~60 KB blobs)
-  *  - ObjectHashAggregate fallback threshold 65536 (ANN top-k: keep
-  *    thousands of query_id groups on the hash partial path)
-  *  - `InferFiltersFromGenerate` excluded engine-wide (13× on the
-  *    shingle explodes)
-  *  - UTC session time zone, AQE on, no UI
+  *  - [[QueryConfs]]
+  *
+  * [[builder]] adds what only suits a local harness whose checkpoints
+  * are throwaway — Bench, ScalingBench, Verify, Explain, RunOne,
+  * BenchExtra, UpdGen and the test session: no UI, shuffle scratch
+  * under `java.io.tmpdir`, and checkpoint IO without corruption checks
+  * (no checksums, no `.crc` files, no Shell-fork chmod; see
+  * [[graft.hadoop.NioLocalFileSystem]]). A deployment resumes from
+  * its checkpoints, so it keeps Spark's checked defaults.
   */
 object GraftSession {
 
-  def builder(master: String, partitions: String): SparkSession.Builder =
+  /** Query confs every engine query relies on, also set by
+    * [[GraftExtensions.install]] on sessions the engine did not build:
+    *
+    *  - ObjectHashAggregate fallback threshold 65536 (ANN top-k: keep
+    *    thousands of query_id groups on the hash partial path)
+    *  - `InferFiltersFromGenerate` excluded (it re-evaluates expensive
+    *    generator inputs in an interpreted filter: 13× on the shingle
+    *    explodes)
+    */
+  val QueryConfs: Map[String, String] = Map(
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
+    "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+
+  def engine(master: String, partitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      .config(QueryConfs)
+
+  def builder(master: String, partitions: String): SparkSession.Builder =
+    engine(master, partitions)
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
-      // local `file:` scheme without the Shell-fork chmod fallback and
-      // without `.crc` shadow files (see NioLocalFileSystem scaladoc);
-      // HDFS/object-store deployments override or simply never touch
-      // `file:` paths
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.hadoop.NioLocalFileSystem"))
-      // shuffle/block scratch follows java.io.tmpdir (build.sbt points
-      // both at tmpfs when available; SPARK_GRAFT_TMPDIR overrides) —
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      .config("spark.hadoop.fs.file.impl", "graft.hadoop.NioLocalFileSystem")
       // Spark's own default is the literal "/tmp", which ignores the
-      // JVM's tmpdir setting
+      // JVM's tmpdir (build.sbt points it at tmpfs when available)
       .config("spark.local.dir", sys.props("java.io.tmpdir"))
       .config("spark.ui.enabled", "false")
 }

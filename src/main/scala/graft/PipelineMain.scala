@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sink.ExactlyOnceSink
@@ -27,11 +27,15 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
   *
   * Every sink is the exactly-once batchId-committed MERGE protocol
   * with per-partition lineage (D2/D7); restart with the same
-  * checkpoint dir resumes with no dup/dropped rows. On a cluster, the
-  * master/executor topology comes from spark-submit; locally pass
-  * `--master local[N]`.
+  * checkpoint dir resumes with no dup/dropped rows. The session is
+  * [[GraftSession.engine]]: checkpoints keep Spark's checksums and
+  * `.crc` files, since a restart resumes from them.
   *
   * Options (all have defaults for a local smoke run):
+  *   --master <url>      used when spark-submit set no `spark.master`
+  *                       (default local[N], N = env SPARK_GRAFT_CPUS
+  *                       or 32)
+  *   --shuffle-partitions <n>  default N as for --master
   *   --input <dir>       clip parquet dir (default: staged sf0.001)
   *   --updates <dir>     transcript-update parquet dir (optional)
   *   --output <dir>      sink root (default: ./pipeline_out)
@@ -121,6 +125,13 @@ object PipelineMain {
       upserts: Map[String, graft.sink.UpsertSink],
       listener: GraftQueryListener)
 
+  private val DefaultCpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** spark-submit's `spark.master` first, then `--master`, then local. */
+  private[graft] def master(opt: Map[String, String],
+      submitted: Option[String]): String =
+    submitted.orElse(opt.get("master")).getOrElse(s"local[$DefaultCpus]")
+
   def main(args: Array[String]): Unit = {
     val (opt, enabled) =
       try {
@@ -131,21 +142,11 @@ object PipelineMain {
           System.err.println(s"[pipeline] ${e.getMessage}")
           sys.exit(2)
       }
-    val builder = SparkSession.builder()
+    val spark = GraftSession
+      .engine(master(opt, sys.props.get("spark.master")),
+        opt.getOrElse("shuffle-partitions", DefaultCpus))
       .appName("graft-pipeline")
-      .withExtensions(new GraftExtensions) // as-of strategy + simhash32/minhash32 SQL functions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        opt.getOrElse("shuffle-partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.parquet.columnarReaderBatchSize", "256")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536") // ANN top-k: keep thousands of query_id groups on the hash partial path
-      .config("spark.sql.adaptive.enabled", "true")
-    // master comes from spark-submit on a cluster; default local for dev
-    val spark =
-      (if (opt.contains("master") || sys.props.contains("spark.master")) builder
-       else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-        .getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -234,15 +235,40 @@ object PipelineMain {
     def clipStream(): DataFrame =
       spark.readStream.schema(clipSchema).parquet(input)
 
+    def clipMeta(): Dataset[ClipMeta] =
+      clipStream()
+        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
+          col("transcript"), col("event_time").cast("timestamp").as("event_time"),
+          xxhash64(col("clip_id"), col("event_time")).as("event_id"))
+        .withWatermark("event_time", watermark)
+        .as[ClipMeta]
+
+    def start(name: String, df: DataFrame)(write: (DataFrame, Long) => Unit): StreamingQuery =
+      df.writeStream
+        .queryName(s"graft_$name")
+        .foreachBatch(write)
+        .option("checkpointLocation", s"$ckpt/$name")
+        .trigger(trigger)
+        .start()
+
     var sinks = Map.empty[String, ExactlyOnceSink]
     var upserts = Map.empty[String, graft.sink.UpsertSink]
 
-    // ---- query 1: decode map → mapped-record sink (the reference's
-    //      core topology, M1/M4 + F1/F4; --strict-max-failures swaps in
-    //      the poison-pill decode)
-    val q1 = if (!enabled.contains("mapped")) None else Some {
-      val mappedSink = new ExactlyOnceSink(s"$output/mapped", Seq("out_id"))
-      sinks += ("mapped" -> mappedSink)
+    /** Starts pipeline `name`, if enabled, into an exactly-once sink
+      * under `<output>/<dir>` keyed by `keys`.
+      */
+    def exactlyOnce(name: String, dir: String, keys: String*)(
+        df: => DataFrame): Option[StreamingQuery] =
+      if (!enabled.contains(name)) None else Some {
+        val sink = new ExactlyOnceSink(s"$output/$dir", keys)
+        sinks += (name -> sink)
+        start(name, df)(sink.write)
+      }
+
+    // ---- decode map → mapped-record sink (the reference's core
+    //      topology, M1/M4 + F1/F4; --strict-max-failures swaps in the
+    //      poison-pill decode)
+    val mapped = exactlyOnce("mapped", "mapped", "out_id") {
       val typedClips = clipStream().as[graft.model.Clip]
       val decoded = opt.get("strict-max-failures") match {
         case Some(n) => ClipPipeline.decodeStageStrict(typedClips, n.toLong)
@@ -251,141 +277,80 @@ object PipelineMain {
       val mapped = decoded.toDF()
         .withColumn("event_time", col("event_time").cast("timestamp"))
       Metrics.observed(mapped, "mapped_out")
-        .writeStream
-        .queryName("graft_mapped")
-        .foreachBatch((df: DataFrame, id: Long) => mappedSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/mapped")
-        .trigger(trigger)
-        .start()
     }
 
-    // ---- query 2: keyed stateful dedup decisions (D1)
-    val q2 = if (!enabled.contains("dedup")) None else Some {
-      val dedupSink = new ExactlyOnceSink(s"$output/dedup", Seq("clip_id", "occurrence"))
-      sinks += ("dedup" -> dedupSink)
-      val meta = clipStream()
-        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
-          col("transcript"), col("event_time").cast("timestamp").as("event_time"),
-          xxhash64(col("clip_id"), col("event_time")).as("event_id"))
-        .withWatermark("event_time", watermark)
-        .as[ClipMeta]
-      ClipPipeline.dedupStage(meta, stateTtl).toDF()
-        .writeStream
-        .queryName("graft_dedup")
-        .foreachBatch((df: DataFrame, id: Long) => dedupSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/dedup")
-        .trigger(trigger)
-        .start()
+    // ---- keyed stateful dedup decisions (D1)
+    val dedup = exactlyOnce("dedup", "dedup", "clip_id", "occurrence") {
+      ClipPipeline.dedupStage(clipMeta(), stateTtl).toDF()
     }
 
-    // ---- query 3: watermarked tumbling rollup (A3/D4), append mode —
-    //      only finalized windows are committed
-    val q3 = if (!enabled.contains("rollup")) None else Some {
-      val rollupSink = new ExactlyOnceSink(s"$output/rollups", Seq("window_start", "codec"))
-      sinks += ("rollup" -> rollupSink)
-      val rollup = ClipPipeline.tumblingRollup(
+    // ---- watermarked tumbling rollup (A3/D4), append mode — only
+    //      finalized windows are committed
+    val rollup = exactlyOnce("rollup", "rollups", "window_start", "codec") {
+      ClipPipeline.tumblingRollup(
         clipStream()
           .withColumn("event_time", col("event_time").cast("timestamp"))
           .withWatermark("event_time", watermark),
         windowDur)
-      rollup.writeStream
-        .queryName("graft_rollup")
-        .outputMode("append")
-        .foreachBatch((df: DataFrame, id: Long) => rollupSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/rollup")
-        .trigger(trigger)
-        .start()
     }
 
-    // ---- query 5: session-window MERGE per clip_id (D1b) — the
-    //      reference's within-message merge generalized; on --rocksdb
-    //      this runs the transformWithState processor (typed state +
-    //      event-time timers), otherwise the portable fMGWS twin, so a
-    //      deployment exercises whichever state API its store supports
-    val q5 = if (!enabled.contains("sessions")) None else Some {
-      val sessSink = new ExactlyOnceSink(s"$output/sessions",
-        Seq("clip_id", "session_start"))
-      sinks += ("sessions" -> sessSink)
-      val meta = clipStream()
-        .select(col("clip_id"), col("sr_hz"), col("dur_ms"), col("codec"),
-          col("transcript"), col("event_time").cast("timestamp").as("event_time"),
-          xxhash64(col("clip_id"), col("event_time")).as("event_id"))
-        .withWatermark("event_time", watermark)
-        .as[ClipMeta]
+    // ---- session-window MERGE per clip_id (D1b) — the reference's
+    //      within-message merge generalized; on --rocksdb this runs the
+    //      transformWithState processor (typed state + event-time
+    //      timers), otherwise the portable fMGWS twin, so a deployment
+    //      exercises whichever state API its store supports
+    val sessions = exactlyOnce("sessions", "sessions", "clip_id", "session_start") {
       val merged =
         if (opt.contains("rocksdb"))
-          graft.streaming.TwsSessionMerge.sessionMergeStageTws(meta)
-        else ClipPipeline.sessionMergeStage(meta)
+          graft.streaming.TwsSessionMerge.sessionMergeStageTws(clipMeta())
+        else ClipPipeline.sessionMergeStage(clipMeta())
       merged.toDF()
-        .writeStream
-        .queryName("graft_sessions")
-        .foreachBatch((df: DataFrame, id: Long) => sessSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/sessions")
-        .trigger(trigger)
-        .start()
     }
 
-    // ---- query 4: transcript-update interval join (J3; needs --updates)
-    val q4 = if (!enabled.contains("join")) None else Some {
-      val updDir = opt("updates")
-      val joinSink = new ExactlyOnceSink(s"$output/joined", Seq("clip_id", "u_event_time"))
-      sinks += ("join" -> joinSink)
+    // ---- transcript-update interval join (J3; needs --updates)
+    val join = exactlyOnce("join", "joined", "clip_id", "u_event_time") {
       val updates = spark.readStream
         .schema(StructType(Seq(
           StructField("clip_id", StringType),
           StructField("u_transcript", StringType),
           StructField("u_event_time", TimestampNTZType))))
-        .parquet(updDir)
+        .parquet(opt("updates"))
         .withColumn("u_event_time", col("u_event_time").cast("timestamp"))
       val clips = clipStream()
         .select(col("clip_id"), col("transcript"),
           col("event_time").cast("timestamp").as("event_time"))
-      val joined = ClipPipeline.transcriptUpdateJoin(clips, updates, watermark, "10 MINUTES")
-      joined.writeStream
-        .queryName("graft_join")
-        .foreachBatch((df: DataFrame, id: Long) => joinSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/join")
-        .trigger(trigger)
-        .start()
+      ClipPipeline.transcriptUpdateJoin(clips, updates, watermark, "10 MINUTES")
     }
 
-    // ---- query 6: keyed MERGE upsert into a bucketed snapshot chain
-    //      (S3's Iceberg-MERGE shape) — the CURRENT-STATE view of the
-    //      clip table: latest event time wins per clip_id, stale
-    //      replays never regress a key, untouched buckets carry
-    //      forward by reference
-    // ---- query 7: per-source token-budget admission (the ingestion-
-    //      time mixing control — s34's stateful operator as a
-    //      deployable stage): each codec stratum admits clips in
-    //      processing order until its running transcript-token total
-    //      passes --token-budget; rows past the cut are still
-    //      committed as rejected audit rows, never silently dropped.
-    //      Requires --rocksdb (transformWithState). doc_id is
+    // ---- per-source token-budget admission (the ingestion-time
+    //      mixing control — s34's stateful operator as a deployable
+    //      stage): each codec stratum admits clips in processing order
+    //      until its running transcript-token total passes
+    //      --token-budget; rows past the cut are still committed as
+    //      rejected audit rows, never silently dropped. Requires
+    //      --rocksdb (transformWithState). doc_id is
     //      xxhash64(clip_id, event_time) — the same per-OCCURRENCE
     //      identity the dedup pipeline keys on: bare clip_id repeats
     //      in the stream, and tied doc_ids would leave the fold's
     //      in-batch order (hence cum_tokens attribution and the
     //      sink's byte-identical replay) shuffle-order-dependent.
-    val q7 = if (!enabled.contains("budget")) None else Some {
-      val budgetSink = new ExactlyOnceSink(s"$output/budget", Seq("doc_id"))
-      sinks += ("budget" -> budgetSink)
-      val budget = opt.getOrElse("token-budget", "100000").toLong
+    val budget = exactlyOnce("budget", "budget", "doc_id") {
       val docs = clipStream()
         .select(col("codec").as("source"),
           xxhash64(col("clip_id"), col("event_time")).as("doc_id"),
           col("transcript").as("text"))
       graft.streaming.StreamTokenBudget
-        .stage(graft.streaming.StreamTokenBudget.docTokens(docs), budget)
+        .stage(graft.streaming.StreamTokenBudget.docTokens(docs),
+          opt.getOrElse("token-budget", "100000").toLong)
         .toDF()
-        .writeStream
-        .queryName("graft_budget")
-        .foreachBatch((df: DataFrame, id: Long) => budgetSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/budget")
-        .trigger(trigger)
-        .start()
     }
 
-    val q6 = if (!enabled.contains("upsert")) None else Some {
+    // ---- keyed MERGE upsert into a bucketed snapshot chain (S3's
+    //      Iceberg-MERGE shape) — the CURRENT-STATE view of the clip
+    //      table: latest event time wins per clip_id, stale replays
+    //      never regress a key, untouched buckets carry forward by
+    //      reference
+    val upsert = if (!enabled.contains("upsert")) None else Some {
       val upSink = new graft.sink.UpsertSink(s"$output/upsert",
         Seq("clip_id"), "ver")
       upserts += ("upsert" -> upSink)
@@ -394,17 +359,10 @@ object PipelineMain {
           col("transcript"),
           col("event_time").cast("timestamp").as("event_time"))
         .withColumn("ver", unix_micros(col("event_time")))
-      Metrics.observed(keyed, "upsert_in")
-        .writeStream
-        .queryName("graft_upsert")
-        .foreachBatch((df: DataFrame, id: Long) => upSink.write(df, id))
-        .option("checkpointLocation", s"$ckpt/upsert")
-        .trigger(trigger)
-        .start()
+      start("upsert", Metrics.observed(keyed, "upsert_in"))(upSink.write)
     }
 
-    (q1.toSeq ++ q2.toSeq ++ q3.toSeq ++ q5.toSeq ++ q4.toSeq ++ q6.toSeq ++
-      q7.toSeq)
+    Seq(mapped, dedup, rollup, sessions, join, budget, upsert).flatten
       .foreach(_.awaitTermination())
     // progress events arrive on the async listener bus — drain it
     // before detaching, or the summary can miss the final micro-batch

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Writes the transcript-update table to parquet for `PipelineMain
   * --updates` runs: `runMain graft.UpdGen <outDir> [sfDir]`.
@@ -7,9 +6,7 @@ import org.apache.spark.sql.SparkSession
 object UpdGen {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[4]", "4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.synth.ClipGen.transcriptUpdates(spark, sfDir)
       .write.mode("overwrite").parquet(args(0))

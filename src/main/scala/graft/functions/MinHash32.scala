@@ -99,18 +99,11 @@ object MinHash32 {
       if (m == null) null else UTF8String.fromString(m)))
   }
 
-  /** Register `minhash32(arr, k)` in the session function registry.
-    * k must be a foldable integral literal — `lit(8L)` or a SQL
-    * `CAST(... AS BIGINT)` are accepted (not just INT literals), and a
-    * non-literal k is rejected with a clear analysis error instead of
-    * an undefined eval-against-no-row.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash32", fromExprs, "built-in")
-
-  /** Expression builder shared by [[register]] and
-    * [[graft.GraftExtensions]].
+  /** Expression builder for `minhash32(arr, k)`, registered by
+    * [[graft.GraftExtensions]]. k must be a foldable integral literal
+    * — `lit(8L)` or a SQL `CAST(... AS BIGINT)` are accepted (not just
+    * INT literals), and a non-literal k is rejected with a clear
+    * analysis error instead of an undefined eval-against-no-row.
     */
   private[graft] def fromExprs(
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): MinHash32 = {
@@ -144,7 +137,7 @@ object MinHash32 {
     MinHash32(exprs.head, k)
   }
 
-  /** Column wrapper (requires [[register]] on the active session). */
+  /** Column wrapper (resolves through [[graft.GraftExtensions]]). */
   def minhash32(shingles: Column, k: Int): Column =
     call_function("minhash32", shingles, org.apache.spark.sql.functions.lit(k))
 }

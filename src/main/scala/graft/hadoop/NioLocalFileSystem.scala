@@ -42,7 +42,7 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   }
 }
 
-/** Local `file:` FileSystem for the engine's sessions: a
+/** Local `file:` FileSystem for the harness sessions: a
   * [[LocalFileSystem]] (several Hadoop/Spark code paths cast the
   * `file:` scheme to that class — e.g. `FileSystem.getLocal` inside
   * the RocksDB state file manager) over [[NioRawLocalFileSystem]],
@@ -50,9 +50,8 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   * durability story for local scratch (checkpoints, staged fixtures,
   * sink work dirs) is the atomic-rename commit protocol, not `.crc`
   * twins that double every metadata operation. Registered for the
-  * `file:` scheme by [[graft.GraftSession]]; env-overridable
-  * (SPARK_GRAFT_LOCAL_FS) and simply never used by HDFS/object-store
-  * deployments.
+  * `file:` scheme by the harness layer of [[graft.GraftSession]]; the
+  * deployed [[graft.PipelineMain]] keeps Hadoop's checksummed default.
   */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
 

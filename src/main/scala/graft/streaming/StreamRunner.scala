@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Helpers for driving streaming plans to a deterministic batch result
@@ -27,8 +27,9 @@ object StreamRunner {
   // those fixed costs even when a batch carries a few MB. The sizing
   // below targets `spark.sql.adaptive.advisoryPartitionSizeInBytes`
   // (default 64 MB) of SOURCE bytes per state partition (×4 expansion
-  // for parquet→row decompression), clamped to [2, defaultParallelism]
-  // locally; a cluster deployment overrides the result with
+  // for parquet→row decompression), capped at defaultParallelism and
+  // floored at min(8, defaultParallelism) (reason at the floor below);
+  // a cluster deployment overrides the result with
   // SPARK_GRAFT_STREAM_PARTITIONS (absolute) exactly like the other
   // env-parameterised scale knobs. Results are partitioning-independent
   // (hash-partitioned keyed state; every query's oracle sorts), so this
@@ -296,15 +297,35 @@ object StreamRunner {
           .start()
         (name, q)
       }
-      try started.foreach(_._2.awaitTermination())
-      catch {
-        case e: Throwable =>
-          // don't leave the sibling query running against a half-torn
-          // session if one half fails
-          started.foreach(s => try s._2.stop() catch { case _: Throwable => () })
-          throw e
-      }
+      awaitAll(started.map(_._2))
       started.map { case (name, _) => spark.table(name) }
+    }
+  }
+
+  /** Waits for every query in `queries` to end. The first failure
+    * stops the others (a sibling left running against a half-torn
+    * session would only add noise) and is rethrown, with any later
+    * failures attached as suppressed, so the root cause surfaces first
+    * whatever the list order.
+    */
+  private def awaitAll(queries: Seq[StreamingQuery]): Unit = {
+    var running = queries
+    var failures = Vector.empty[Throwable]
+    def stopAll(qs: Seq[StreamingQuery]): Unit =
+      qs.foreach(q => try q.stop() catch { case e: Throwable => failures :+= e })
+    while (running.nonEmpty) {
+      val (ended, active) = running.partition(!_.isActive)
+      val firstFailure = failures.isEmpty && ended.exists(_.exception.nonEmpty)
+      failures ++= ended.flatMap(_.exception)
+      if (firstFailure) stopAll(active)
+      running = active
+      if (running.nonEmpty)
+        try Thread.sleep(10)
+        catch { case e: InterruptedException => stopAll(running); throw e }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
   }
 

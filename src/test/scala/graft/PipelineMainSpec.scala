@@ -198,4 +198,12 @@ class PipelineMainSpec extends AnyFunSuite {
       PipelineMain.parseArgs(Array("stray"))
     }
   }
+
+  test("master: spark-submit's spark.master, then --master, then local[SPARK_GRAFT_CPUS]") {
+    val opt = PipelineMain.parseArgs(Array("--master", "local[2]", "--once"))
+    assert(PipelineMain.master(opt, Some("spark://h:7077")) == "spark://h:7077")
+    assert(PipelineMain.master(opt, None) == "local[2]")
+    assert(PipelineMain.master(Map.empty, None) ==
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+  }
 }

@@ -878,4 +878,33 @@ class StreamingSpec extends AnyFunSuite {
         s"restored-total admission profile mismatch: ${out.toSeq}")
     }
   }
+
+  test("runAllToMemory surfaces the first failure and stops the slower sibling") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_runall_").toString
+    spark.range(1).write.mode("overwrite").parquet(dir)
+    def stream = spark.readStream.schema("id LONG").parquet(dir)
+    // the sibling would fail too, but only after the first failure;
+    // listed first, so waiting in list order would report it instead
+    val slow = udf { (id: Long) =>
+      Thread.sleep(30000L)
+      if (id >= 0) throw new IllegalStateException("slow sibling failed")
+      id
+    }
+    val fast = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("first failure")
+      id
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      StreamRunner.runAllToMemory(Seq(
+        (stream.select(slow(col("id"))), "append"),
+        (stream.select(fast(col("id"))), "append")))
+    }
+    def chain(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(chain(e).exists(m => m != null && m.contains("first failure")), chain(e))
+    assert(!chain(e).exists(m => m != null && m.contains("slow sibling")), chain(e))
+    assert((System.nanoTime() - t0) / 1e9 < 25.0, "slow sibling was not stopped")
+    assert(!spark.streams.active.exists(_.name.startsWith("graft_mem_")))
+  }
 }
