@@ -13,14 +13,16 @@ import org.apache.spark.sql.SparkSession
   *  - 256-row columnar reader batches (binary-payload tables OOM the
   *    4096-row default on ~60 KB blobs)
   *  - [[QueryConfs]]
+  *  - [[LocalFsConfs]]: local `file:` IO without forked shell commands,
+  *    every checksum kept
   *
   * [[builder]] adds what only suits a local harness whose checkpoints
   * are throwaway — Bench, ScalingBench, Verify, Explain, RunOne,
   * BenchExtra, UpdGen and the test session: no UI, shuffle scratch
   * under `java.io.tmpdir`, and checkpoint IO without corruption checks
-  * (no checksums, no `.crc` files, no Shell-fork chmod; see
-  * [[graft.hadoop.NioLocalFileSystem]]). A deployment resumes from
-  * its checkpoints, so it keeps Spark's checked defaults.
+  * (no checkpoint checksums, no `.crc` files via
+  * [[graft.hadoop.NioLocalFileSystem]], the `FileSystem`-based
+  * checkpoint manager).
   */
 object GraftSession {
 
@@ -38,6 +40,19 @@ object GraftSession {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
+  /** The `file:` scheme bound, for both Hadoop filesystem APIs, to
+    * Hadoop's checksummed local filesystem over NIO — no forked `chmod`
+    * per created file, no forked `readlink` per rename:
+    * [[graft.hadoop.NioChecksumLocalFileSystem]] for `FileSystem`,
+    * [[graft.hadoop.NioLocalFs]] for `FileContext` (what Spark's
+    * default checkpoint manager writes through). `.crc` twins and
+    * Spark's checkpoint file checksums stay on: a deployment resumes
+    * from its checkpoints. Other schemes keep Hadoop's bindings.
+    */
+  val LocalFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> "graft.hadoop.NioChecksumLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.hadoop.NioLocalFs")
+
   def engine(master: String, partitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -47,6 +62,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.parquet.columnarReaderBatchSize", "256")
       .config(QueryConfs)
+      .config(LocalFsConfs)
 
   def builder(master: String, partitions: String): SparkSession.Builder =
     engine(master, partitions)

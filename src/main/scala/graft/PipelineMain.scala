@@ -1,10 +1,14 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.hadoop.NioRawLocalFileSystem
 import graft.sink.ExactlyOnceSink
 import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
 
@@ -29,7 +33,10 @@ import graft.streaming.{ClipMeta, ClipPipeline, GraftQueryListener, Metrics}
   * with per-partition lineage (D2/D7); restart with the same
   * checkpoint dir resumes with no dup/dropped rows. The session is
   * [[GraftSession.engine]]: checkpoints keep Spark's checksums and
-  * `.crc` files, since a restart resumes from them.
+  * `.crc` files, since a restart resumes from them, and local `file:`
+  * IO goes through the NIO-backed Hadoop bindings (no forked `chmod`
+  * or `readlink`). Startup warns on stderr when the `file:`
+  * FileSystem it gets is not that binding (see [[localFsWarning]]).
   *
   * Options (all have defaults for a local smoke run):
   *   --master <url>      used when spark-submit set no `spark.master`
@@ -132,6 +139,23 @@ object PipelineMain {
       submitted: Option[String]): String =
     submitted.orElse(opt.get("master")).getOrElse(s"local[$DefaultCpus]")
 
+  /** The stderr warning for a `file:` FileSystem that is not
+    * NIO-backed. Hadoop caches FileSystems per scheme and user, not
+    * per conf, so one a launcher created before the session was built
+    * wins over the engine's `fs.file.impl` binding, and that one forks
+    * a `chmod` per created file.
+    */
+  private[graft] def localFsWarning(fs: FileSystem): Option[String] = {
+    val raw = fs match {
+      case f: FilterFileSystem => f.getRawFileSystem
+      case f => f
+    }
+    if (raw.isInstanceOf[NioRawLocalFileSystem]) None
+    else Some(s"[pipeline] WARNING: the file: FileSystem is ${fs.getClass.getName}, " +
+      "not NIO-backed (cached before the session was built?): local checkpoint " +
+      "and sink IO forks a shell command per file")
+  }
+
   def main(args: Array[String]): Unit = {
     val (opt, enabled) =
       try {
@@ -148,6 +172,8 @@ object PipelineMain {
       .appName("graft-pipeline")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    localFsWarning(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration))
+      .foreach(System.err.println)
     import spark.implicits._
 
     val r = run(spark, opt, enabled)

@@ -423,6 +423,12 @@ object ScalingBench {
     *    (a corrupted probe must not become the denominator), and it is
     *    never reported as the headline while a valid pass exists. The
     *    reported pass ceiling is the median pair's own-window probe.
+    *    Per attempt, `ceiling_raw_median_pair` is that probe before the
+    *    clamp, `ceiling_valid_all_pairs` holds when every kept pair's
+    *    probe was plausible, and `ceiling_probe_tries_kept_pairs` sums
+    *    the kept pairs' probe tries (a pair replaced as a dispersion
+    *    outlier takes its tries with it). Rounds up to r06 recorded
+    *    these as `ceiling_raw`, `ceiling_valid`, `ceiling_probe_tries`.
     *  - the ceiling is clamped at ≤1.0 AND `normalized_efficiency` is
     *    clamped at ≤1.0 — no value in the block can exceed 1.0 (an
     *    engine cannot scale better than perfectly; anything above is
@@ -489,6 +495,13 @@ object ScalingBench {
     }
   }
 
+  /** Efficiency over the machine ceiling, clamped at 1.0; an invalid
+    * ceiling is never the denominator — neutral 1.0 instead (can only
+    * understate, never flatter).
+    */
+  private[graft] def normalized(eff: Double, ceiling: Double, ceilValid: Boolean): Double =
+    math.min(eff / (if (ceilValid) ceiling else 1.0), 1.0)
+
   /** One pair plus the machine-ceiling probe measured IMMEDIATELY
     * after it — the same host window. A pass-level ceiling probed
     * minutes before its pairs decouples from them under bursty
@@ -500,54 +513,56 @@ object ScalingBench {
     * contended pair's normalized value, and a burst-window ceiling
     * can no longer inflate a clean one's.
     */
-  private final case class PairUnit(pair: PairMeas, ceilRaw: Double,
+  private[graft] final case class PairUnit(pair: PairMeas, ceilRaw: Double,
       ceilTries: Int, ceilValid: Boolean)
+
+  /** One pass of [[scalingEvidence]]: its surviving pair units and the
+    * pairs it rejected, with every statistic the artifact reports.
+    */
+  private[graft] final case class Pass(units: Seq[PairUnit], rejectedPairs: Seq[PairMeas]) {
+    val pairs: Seq[PairMeas] = units.map(_.pair)
+    val ratios: Seq[Double] = pairs.map(_.ratio)
+    val pairsValid: Boolean = pairs.forall(_.valid)
+    // statistics over real (non-sentinel) pairs only — a ratio-0
+    // budget sentinel must not become the median or the mid pair
+    private val statUnits = {
+      val real = units.filterNot(_.pair.sentinel)
+      if (real.nonEmpty) real else units
+    }
+    private val statRatios = statUnits.map(_.pair.ratio)
+    val dispersion: Double =
+      if (statRatios.isEmpty) Double.PositiveInfinity
+      else statRatios.max / statRatios.min
+    val dispersionValid: Boolean = dispersion <= MaxPassDispersion
+    // MEDIAN of the paired ratios (lower-middle for even counts:
+    // never the favorable rounding) — each ratio comes from a lo/hi
+    // pair measured back-to-back, so common-mode host drift cancels
+    // within a pair and the median discards a single corrupted one
+    private val mid = statRatios.sorted.apply((statRatios.size - 1) / 2)
+    val raw: Double = mid
+    // the reported (sec_lo, sec_hi, ceiling) are the median pair's
+    // OWN components — one physical measurement window, so
+    // sec_lo/sec_hi/raw/ceiling/normalized are mutually consistent
+    private val midUnit = statUnits.minBy(u => math.abs(u.pair.ratio - mid))
+    val (tLo, tHi): (Double, Double) = (midUnit.pair.tLo, midUnit.pair.tHi)
+    val ceilRaw: Double = midUnit.ceilRaw
+    val ceil: Double = math.min(ceilRaw, 1.0)
+    val ceilTries: Int = units.map(_.ceilTries).sum
+    // STRICT: every surviving pair's window must have produced a
+    // plausible ceiling — mirrors pairsValid quantifying over every
+    // pair, and is stricter than the former single pass-level probe
+    val ceilValid: Boolean = statUnits.forall(_.ceilValid)
+    // a pass is valid only when every per-pair ceiling probe, EVERY
+    // surviving pair (plausible ratio + low external CPU), and the
+    // cross-pair dispersion all check out — three independent
+    // contention signals
+    val valid: Boolean = ceilValid && pairsValid && dispersionValid
+    // neutral 1.0 denominator when ANY pair's probe is implausible
+    val norm: Double = normalized(raw, ceil, ceilValid)
+  }
 
   def scalingEvidence(sfDir: String, lo: Int = 6, hi: Int = 24,
       reps: Int = 3, workScale: Int = 6, passes: Int = 2): String = {
-    final case class Pass(units: Seq[PairUnit], rejectedPairs: Seq[PairMeas]) {
-      val pairs: Seq[PairMeas] = units.map(_.pair)
-      val ratios: Seq[Double] = pairs.map(_.ratio)
-      val pairsValid: Boolean = pairs.forall(_.valid)
-      // statistics over real (non-sentinel) pairs only — a ratio-0
-      // budget sentinel must not become the median or the mid pair
-      private val statUnits = {
-        val real = units.filterNot(_.pair.sentinel)
-        if (real.nonEmpty) real else units
-      }
-      private val statRatios = statUnits.map(_.pair.ratio)
-      val dispersion: Double =
-        if (statRatios.isEmpty) Double.PositiveInfinity
-        else statRatios.max / statRatios.min
-      val dispersionValid: Boolean = dispersion <= MaxPassDispersion
-      // MEDIAN of the paired ratios (lower-middle for even counts:
-      // never the favorable rounding) — each ratio comes from a lo/hi
-      // pair measured back-to-back, so common-mode host drift cancels
-      // within a pair and the median discards a single corrupted one
-      private val mid = statRatios.sorted.apply((statRatios.size - 1) / 2)
-      val raw: Double = mid
-      // the reported (sec_lo, sec_hi, ceiling) are the median pair's
-      // OWN components — one physical measurement window, so
-      // sec_lo/sec_hi/raw/ceiling/normalized are mutually consistent
-      private val midUnit = statUnits.minBy(u => math.abs(u.pair.ratio - mid))
-      val (tLo, tHi): (Double, Double) = (midUnit.pair.tLo, midUnit.pair.tHi)
-      val ceilRaw: Double = midUnit.ceilRaw
-      val ceil: Double = math.min(ceilRaw, 1.0)
-      val ceilTries: Int = units.map(_.ceilTries).sum
-      // STRICT: every surviving pair's window must have produced a
-      // plausible ceiling — mirrors pairsValid quantifying over every
-      // pair, and is stricter than the former single pass-level probe
-      val ceilValid: Boolean = statUnits.forall(_.ceilValid)
-      // a pass is valid only when every per-pair ceiling probe, EVERY
-      // surviving pair (plausible ratio + low external CPU), and the
-      // cross-pair dispersion all check out — three independent
-      // contention signals
-      val valid: Boolean = ceilValid && pairsValid && dispersionValid
-      // an INVALID ceiling never becomes the denominator — normalize
-      // against neutral 1.0 instead (can only understate, not flatter)
-      val norm: Double =
-        math.min(raw / (if (midUnit.ceilValid) ceil else 1.0), 1.0)
-    }
     // bounded budgets: at most `passes`+2 pass runs chasing `passes`
     // valid ones, and a global cap on pair executions (retries
     // included) so a hopelessly contended box terminates with visible
@@ -656,7 +671,7 @@ object ScalingBench {
       // non-finite — Infinity is not valid JSON and would break the
       // driver's artifact parse; clamp to a visibly-absurd finite value
       val disp = if (java.lang.Double.isFinite(p.dispersion)) p.dispersion else 999.999
-      f"""{"raw":${p.raw}%.3f,"ceiling":${p.ceil}%.3f,"ceiling_raw":${p.ceilRaw}%.3f,"ceiling_probe_tries":${p.ceilTries},"ceiling_valid":${p.ceilValid},"pairs_valid":${p.pairsValid},"dispersion":$disp%.3f,"dispersion_valid":${p.dispersionValid},"valid":${p.valid},"normalized":${p.norm}%.3f,"sec_lo":${p.tLo}%.2f,"sec_hi":${p.tHi}%.2f,"pair_ratios":$prs,"pair_ceilings":$pcs,"pair_ext_cpu":$ext,"rejected_pairs":$rej}"""
+      f"""{"raw":${p.raw}%.3f,"ceiling":${p.ceil}%.3f,"ceiling_raw_median_pair":${p.ceilRaw}%.3f,"ceiling_probe_tries_kept_pairs":${p.ceilTries},"ceiling_valid_all_pairs":${p.ceilValid},"pairs_valid":${p.pairsValid},"dispersion":$disp%.3f,"dispersion_valid":${p.dispersionValid},"valid":${p.valid},"normalized":${p.norm}%.3f,"sec_lo":${p.tLo}%.2f,"sec_hi":${p.tHi}%.2f,"pair_ratios":$prs,"pair_ceilings":$pcs,"pair_ext_cpu":$ext,"rejected_pairs":$rej}"""
     }.mkString("[", ",", "]")
     val isolation = if (forkUnavailable) "in-process" else "fork"
     f"""{"cpus_lo":$lo,"cpus_hi":$hi,"work_scale":$workScale,"reps":$reps,"headline_rule":"median_consistent_valid_pass","isolation":"$isolation","sec_lo":${best.tLo}%.2f,"sec_hi":${best.tHi}%.2f,"raw_efficiency":${best.raw}%.3f,"machine_cpu_ceiling":${best.ceil}%.3f,"machine_cpu_ceiling_raw":${best.ceilRaw}%.3f,"normalized_efficiency":${best.norm}%.3f,"cross_pass_spread":$crossSpread%.3f,"cross_pass_consistent":$crossOk,"headline_valid":${best.valid && crossOk},"attempts":$attempts}"""
@@ -733,8 +748,7 @@ object ScalingBench {
     val thLo = nClips.toDouble * workScale / tLo
     val thHi = nClips.toDouble * workScale / tHi
     val eff = mid
-    // invalid ceiling → neutral 1.0 denominator (see measureCeiling)
-    val norm = math.min(eff / (if (ceilValid) ceiling else 1.0), 1.0)
+    val norm = normalized(eff, ceiling, ceilValid)
     println(
       f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","machine_cpu_ceiling":$ceiling%.3f,"machine_cpu_ceiling_raw":$ceilRaw%.3f,"ceiling_valid":$ceilValid,"pairs_valid":$pairsValid,"normalized_efficiency":$norm%.3f,"sf":"$sfDir","n_clips":$nClips,"work_scale":$workScale,"cpus_lo":$lo,"cpus_hi":$hi,"sec_lo":$tLo%.2f,"sec_hi":$tHi%.2f,"clips_per_sec_lo":$thLo%.1f,"clips_per_sec_hi":$thHi%.1f,"stream_p99_batch_ms_lo":${p99(latLo)}%.0f,"stream_p99_batch_ms_hi":${p99(latHi)}%.0f}""")
   }

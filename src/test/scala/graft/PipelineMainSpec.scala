@@ -206,4 +206,17 @@ class PipelineMainSpec extends AnyFunSuite {
     assert(PipelineMain.master(Map.empty, None) ==
       s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
   }
+
+  test("startup warns, naming the class, when the file: FileSystem is not NIO-backed") {
+    def fs(impl: String) = {
+      val c = new org.apache.hadoop.conf.Configuration()
+      c.set("fs.file.impl", impl)
+      org.apache.hadoop.fs.FileSystem.newInstance(java.net.URI.create("file:///"), c)
+    }
+    val stock = fs("org.apache.hadoop.fs.LocalFileSystem")
+    val warning = PipelineMain.localFsWarning(stock)
+    assert(warning.exists(_.contains("org.apache.hadoop.fs.LocalFileSystem")), warning)
+    for (impl <- Seq("graft.hadoop.NioChecksumLocalFileSystem", "graft.hadoop.NioLocalFileSystem"))
+      assert(PipelineMain.localFsWarning(fs(impl)).isEmpty, impl)
+  }
 }

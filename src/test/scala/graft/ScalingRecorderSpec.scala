@@ -58,4 +58,19 @@ class ScalingRecorderSpec extends AnyFunSuite {
     // median and is re-measured first
     assert(ScalingBench.dispersionOutlierIndex(Seq(0.68, 0.0, 0.69)) == 1)
   }
+
+  test("an implausible probe in ANY pair normalizes the pass against neutral 1.0") {
+    def unit(ratio: Double, ceil: Double, ok: Boolean) = ScalingBench.PairUnit(
+      ScalingBench.PairMeas(1.0, 1.0 / ratio, ratio, 0.0, valid = true, ""), ceil, 1, ok)
+    val clean = ScalingBench.Pass(
+      Seq(unit(0.70, 0.85, ok = true), unit(0.75, 0.80, ok = true), unit(0.78, 0.90, ok = true)), Nil)
+    assert(clean.ceilValid && clean.valid)
+    assert(math.abs(clean.norm - 0.75 / 0.80) < 1e-9)
+    // the median pair's probe is plausible; a sibling's is not
+    val tainted = ScalingBench.Pass(
+      Seq(unit(0.70, 0.30, ok = false), unit(0.75, 0.80, ok = true), unit(0.78, 0.90, ok = true)), Nil)
+    assert(!tainted.ceilValid && !tainted.valid)
+    assert(tainted.ceilRaw == 0.80) // still the median pair's own probe
+    assert(tainted.norm == 0.75)
+  }
 }
